@@ -71,12 +71,9 @@ def _golden_corpus_df(spark: SparkSession) -> DataFrame:
 def _eval_schema():
     from cypher_guard_spark.guard import DbSchema
 
-    ref = Path("/root/reference/data/schema/eval_schema.json")
-    if ref.exists():
-        return DbSchema.from_dict(json.loads(ref.read_text()))
-    from cypher_guard_spark.pipeline import pipeline_db_schema
-
-    return pipeline_db_schema()
+    return DbSchema.from_dict(
+        json.loads((REPO / "tests/golden/eval_schema.json").read_text())
+    )
 
 
 def _unit_schema():
@@ -89,8 +86,9 @@ def _unit_schema():
 
 def _validated_corpus(spark: SparkSession) -> DataFrame:
     """The golden corpus run through the vectorized guard, each entry
-    against its own DbSchema (eval-yml/quirk entries → the reference eval
-    schema; reference-unit-test entries → test_validation.py's schema) —
+    against its own DbSchema (eval-yml/quirk entries → the eval schema,
+    tests/golden/eval_schema.json; reference-unit-test entries →
+    test_validation.py's schema) —
     one validate pass per schema, unioned."""
     from cypher_guard_spark.spark import validate_dataframe
 

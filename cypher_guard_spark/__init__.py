@@ -16,4 +16,10 @@ for Apache Spark:
   search, text analysis, multimodal plumbing).
 """
 
+from . import _zipimport_cache
+
 __version__ = "0.1.0"
+
+# Spark's Python worker re-reads pyspark.zip and the Spark jar at the start
+# of every task on Python < 3.12; see _zipimport_cache.
+_zipimport_cache.install()

@@ -86,13 +86,17 @@ _PARSED_SCHEMA = StructType(
 
 
 class MergeApplyRefused(Exception):
-    """A statement failed validation or fell outside the applier subset."""
+    """Statements failed validation or fell outside the applier subset.
 
-    def __init__(self, failures: list):
+    ``failures`` lists the first 20 refused (statement, reason) pairs;
+    ``total`` counts every refused statement."""
+
+    def __init__(self, failures: list, total: int):
         self.failures = failures
+        self.total = total
         super().__init__(
-            f"{len(failures)} statement(s) refused; first: "
-            f"{failures[0][1]} [{failures[0][0][:120]}]"
+            f"{total} statement(s) refused (first {len(failures)} listed); "
+            f"first: {failures[0][1]} [{failures[0][0][:120]}]"
         )
 
 
@@ -240,13 +244,8 @@ def _parse_statement(stmt: str, schema: DbSchema) -> tuple:
 
 
 def _make_parse_fn(bc_schema):
-    cache: dict = {}
-
     def batch(series_iter: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        schema = cache.get("schema")
-        if schema is None:
-            schema = bc_schema.value
-            cache["schema"] = schema
+        schema = bc_schema.value
         for series in series_iter:
             rows = [_parse_statement(s, schema) for s in series]
             yield pd.DataFrame(
@@ -290,11 +289,16 @@ def apply_merge_batches(
     `batches` carries newline-joined multi-statement batch strings
     (build_merge_batches output) — statements split and explode JVM-side
     before the single parse UDF. `on_error='raise'` (default) raises
-    MergeApplyRefused listing every refused statement; 'skip' applies
-    the valid subset (the refusals remain queryable via
-    parse_merge_statements). The apply itself is one parse pass + two
-    distinct()s — no driver loop, nothing collected but refusals.
+    MergeApplyRefused listing the first 20 refused statements and the
+    total refused count; 'skip' applies the valid subset (the refusals
+    remain queryable via parse_merge_statements); any other value raises
+    ValueError. The apply itself is one parse pass, localCheckpoint()ed
+    so that the refusal probe, the edges and every nodes branch read the
+    parsed rows instead of re-running the UDF, + two distinct()s — no
+    driver loop, nothing collected but refusals.
     """
+    if on_error not in ("raise", "skip"):
+        raise ValueError(f"on_error must be 'raise' or 'skip', not {on_error!r}")
     if schema is None:
         from .synth import pipeline_db_schema
 
@@ -302,12 +306,12 @@ def apply_merge_batches(
     stmts = batches.select(
         F.explode(F.split(F.col(cypher_col), "\n")).alias("statement")
     ).where(F.trim("statement") != "")
-    parsed = parse_merge_statements(spark, stmts, schema)
+    parsed = parse_merge_statements(spark, stmts, schema).localCheckpoint()
     if on_error == "raise":
         bad = parsed.where(F.col("err").isNotNull()).select("statement", "err")
         failures = [(r["statement"], r["err"]) for r in bad.limit(20).collect()]
         if failures:
-            raise MergeApplyRefused(failures)
+            raise MergeApplyRefused(failures, bad.count())
     else:
         parsed = parsed.where(F.col("err").isNull())
     edges = (

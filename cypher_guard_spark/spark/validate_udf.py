@@ -4,8 +4,8 @@ Spark operator.
 The reference validates one query string per FFI call
 (python_bindings/src/lib.rs:1536-1633); here queries arrive as an Arrow
 string column, the DbSchema rides a broadcast variable (deserialized once
-per executor, schema.rs "parsed once and reused" parity at cluster scale),
-and one pandas UDF emits the full verdict struct:
+per Python worker process, schema.rs "parsed once and reused" parity at
+cluster scale), and one pandas UDF emits the full verdict struct:
 
   struct<is_valid boolean, syntax_ok boolean, is_write boolean,
          errors array<struct<code,message,line,column>>>
@@ -76,15 +76,10 @@ def _verdict_row(query: str, schema: DbSchema) -> tuple:
 
 
 def _make_batch_fn(bc_schema):
-    # module-global cache so the broadcast value is unpickled once per
-    # executor worker process, not per batch
-    cache: dict = {}
-
+    # the worker keeps one Broadcast per id (pyspark _broadcastRegistry),
+    # which unpickles .value once and caches it
     def batch(series_iter: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        schema = cache.get("schema")
-        if schema is None:
-            schema = bc_schema.value
-            cache["schema"] = schema
+        schema = bc_schema.value
         for series in series_iter:
             rows = [_verdict_row(q, schema) for q in series]
             yield pd.DataFrame(

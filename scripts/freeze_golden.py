@@ -3,8 +3,9 @@
 
 Corpus = the reference's own eval query texts (data/queries/valid/*.yml,
 vendored as *data* per FIXTURES.md F4) evaluated against the eval schema
-(data/schema/eval_schema.json) + the quirk queries from SURVEY.md §2.6
-(eval schema) + the reference unit-test queries from
+(tests/golden/eval_schema.json, reconstructed per FIXTURES.md F7) + the
+quirk queries from SURVEY.md §2.6 (eval schema) + the reference unit-test
+queries from
 tests/golden/reference_expectations.json, evaluated against the reference
 unit-test schema (tests/golden/unit_schema.json = test_validation.py:4-50).
 Each entry records its ``source`` (eval|quirk|unittest) and ``schema``
@@ -43,7 +44,7 @@ REFERENCE = Path("/root/reference")
 
 
 def eval_schema() -> DbSchema:
-    data = json.loads((REFERENCE / "data/schema/eval_schema.json").read_text())
+    data = json.loads((REPO / "tests/golden/eval_schema.json").read_text())
     return DbSchema.from_dict(data)
 
 

@@ -172,6 +172,42 @@ def test_on_error_skip_applies_valid_subset(spark):
     assert edges.count() == 0
 
 
+def test_on_error_outside_raise_skip_is_refused(spark):
+    """A mistyped mode must not quietly take the skip branch and drop
+    the refusals."""
+    for mode in ("Raise", "ignore", ""):
+        with pytest.raises(ValueError, match="on_error"):
+            apply_merge_batches(
+                spark,
+                _stmts(spark, "CREATE (p:Person {firstName: 'X', lastName: 'Y'})"),
+                on_error=mode,
+            )
+
+
+def test_refusal_lists_first_20_and_counts_all(spark):
+    stmts = [
+        f"CREATE (p:Person {{firstName: 'X{i}', lastName: 'Y'}})" for i in range(25)
+    ]
+    with pytest.raises(MergeApplyRefused) as ei:
+        apply_merge_batches(
+            spark, _stmts(spark, "MERGE (l:Location {city: 'Berlin'})", *stmts)
+        )
+    assert len(ei.value.failures) == 20
+    assert ei.value.total == 25
+    assert str(ei.value).startswith("25 statement(s) refused (first 20 listed)")
+
+
+def test_apply_parses_each_statement_once(spark, triples):
+    """The parse UDF runs in one pass: the nodes and edges plans read the
+    checkpointed parse instead of re-running the UDF per branch."""
+    nodes, edges = apply_merge_batches(
+        spark, build_merge_batches(_entity_frame(triples), triples)
+    )
+    for df in (nodes, edges):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "EvalPython" not in plan, plan
+
+
 def test_parse_exposes_structured_errors(spark):
     parsed = parse_merge_statements(
         spark,

@@ -2,7 +2,8 @@
 
 tests/golden/verdicts.json is produced by scripts/freeze_golden.py over the
 reference's own eval query texts + the SURVEY §2.6 quirk queries (both
-evaluated against the reference eval schema) + the reference-unit-test
+evaluated against tests/golden/eval_schema.json, the eval schema
+reconstructed per FIXTURES.md F7) + the reference-unit-test
 queries (evaluated against tests/golden/unit_schema.json, the
 test_validation.py fixture schema; their expected verdicts are additionally
 anchored to the reference's own test assertions by
@@ -18,13 +19,11 @@ import pytest
 from cypher_guard_spark.guard import DbSchema, api
 
 GOLDEN = json.loads((Path(__file__).parent / "golden/verdicts.json").read_text())
-EVAL_SCHEMA_PATH = Path("/root/reference/data/schema/eval_schema.json")
+EVAL_SCHEMA_PATH = Path(__file__).parent / "golden/eval_schema.json"
 
 
 @pytest.fixture(scope="module")
 def eval_schema():
-    if not EVAL_SCHEMA_PATH.exists():
-        pytest.skip("reference eval schema not available")
     return DbSchema.from_dict(json.loads(EVAL_SCHEMA_PATH.read_text()))
 
 

@@ -12,7 +12,7 @@ from cypher_guard_spark.guard import DbSchema
 pyspark = pytest.importorskip("pyspark")
 
 GOLDEN = json.loads((Path(__file__).parent / "golden/verdicts.json").read_text())
-EVAL_SCHEMA_PATH = Path("/root/reference/data/schema/eval_schema.json")
+EVAL_SCHEMA_PATH = Path(__file__).parent / "golden/eval_schema.json"
 
 
 @pytest.fixture(scope="session")
@@ -26,8 +26,6 @@ def spark():
 
 @pytest.fixture(scope="module")
 def eval_schema():
-    if not EVAL_SCHEMA_PATH.exists():
-        pytest.skip("reference eval schema not available")
     return DbSchema.from_dict(json.loads(EVAL_SCHEMA_PATH.read_text()))
 
 
